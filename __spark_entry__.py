@@ -11,6 +11,9 @@ correctness gate. Column names/types are aligned pairwise.
 
 from __future__ import annotations
 
+import atexit
+import shutil
+import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
@@ -18,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from kgspark import oracles
 from kgspark import synth
 from kgspark.align import align_mentions, align_regions, sentence_regions, token_table
-from kgspark.automaton import build_automaton
+from kgspark.automaton import write_lexicon_artifact
 from kgspark.canonicalize import canonicalize, close_redirects, wikidata_properties
 from kgspark.dedup import (
     exact_duplicates,
@@ -68,16 +71,20 @@ from kgspark.streaming import sessionize
 from kgspark import textops
 from kgspark.triples import mentions_to_triples
 
-_AUTOMATON = None
+_LEXICON_ARTIFACT = None
 _RD_CLOSED = None
 
 
-def _automaton(spark: SparkSession):
-    global _AUTOMATON
-    if _AUTOMATON is None:
-        forms = sorted({r[0] for r in synth.LEXICON_ROWS})
-        _AUTOMATON = spark.sparkContext.broadcast(build_automaton(forms))
-    return _AUTOMATON
+def _automaton(spark: SparkSession) -> str:
+    """Surface-form artifact of the fixture lexicon, written once per
+    session to a tempdir; every spotting query's workers build their
+    matcher from it."""
+    global _LEXICON_ARTIFACT
+    if _LEXICON_ARTIFACT is None:
+        path = tempfile.mkdtemp(prefix="kgspark-entry-lexicon-")
+        atexit.register(shutil.rmtree, path, True)
+        _LEXICON_ARTIFACT = write_lexicon_artifact(synth.lexicon_df(spark), path)
+    return _LEXICON_ARTIFACT
 
 
 def _redirects_closed(spark: SparkSession):

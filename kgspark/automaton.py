@@ -1,116 +1,58 @@
-"""Aho-Corasick multi-pattern matcher for surface-form spotting.
+"""Multi-pattern matcher for surface-form spotting.
 
 Native replacement for the mention-detection half of the DBpedia Spotlight
 service the reference delegates to over HTTP (``R/dbpedia.R:471-485``).
-Spotlight's spotter is a lexicon FSA (Mendes et al. 2011 §4.1); we build the
-same thing: a broadcast automaton over the ``surface_form`` column of the
-lexicon, applied inside a vectorized pandas UDF (see ``kgspark.spot``).
+Spotlight's spotter is a lexicon FSA (Mendes et al. 2011 §4.1); here the
+same match set comes from :class:`FlatMatcher` — vectorized numpy
+per-length substring probes over compact byte tables, no per-character
+Python loop. The lexicon reaches the executors as a parquet artifact of
+surface forms and each Python worker builds its own matcher from it
+(:func:`load_automaton_from_artifact`); the matcher is applied to whole
+Arrow batches inside a pandas UDF (see ``kgspark.spot``).
 
-Three implementations share the ``iter_matches`` contract:
-``FlatMatcher`` (the default — vectorized numpy per-length substring
-probes, compact byte tables that pickle/mmap cheaply, no per-character
-Python loop), the classic pure-Python ``AhoCorasick`` (the portable
-correctness reference the matcher is fuzz-tested against), and the
-optional ``pyahocorasick`` C adapter behind an import gate.
-Matches are emitted for *every* dictionary occurrence (including nested and
-overlapping ones); overlap resolution is a downstream, relational concern
-(``kgspark.overlaps``).
+Matches are emitted for *every* word-bounded dictionary occurrence
+(including nested and overlapping ones); overlap resolution is a
+downstream, relational concern (``kgspark.overlaps``). The classic
+Aho-Corasick automaton lives in ``tests/`` as the reference this matcher
+is fuzz-tested against.
 """
 
 from __future__ import annotations
 
-from collections import deque
-from collections.abc import Iterable, Iterator
+from collections.abc import Iterable
 
 import numpy as np
 
 
-class AhoCorasick:
-    """Classic Aho-Corasick automaton over unicode code points.
-
-    ``iter_matches(text)`` yields ``(start0, pattern)`` for every occurrence
-    of every pattern, 0-based, in increasing end-position order.
-    """
-
-    __slots__ = ("goto", "fail", "out", "patterns")
-
-    def __init__(self, patterns: Iterable[str]):
-        self.patterns: list[str] = sorted(set(p for p in patterns if p))
-        self.goto: list[dict[str, int]] = [{}]
-        self.out: list[list[int]] = [[]]
-        for pid, pat in enumerate(self.patterns):
-            state = 0
-            for ch in pat:
-                nxt = self.goto[state].get(ch)
-                if nxt is None:
-                    self.goto.append({})
-                    self.out.append([])
-                    nxt = len(self.goto) - 1
-                    self.goto[state][ch] = nxt
-                state = nxt
-            self.out[state].append(pid)
-        # BFS failure links; merge output links so nested suffix patterns
-        # (e.g. "merge join" inside "sort merge join") are all reported.
-        self.fail = [0] * len(self.goto)
-        queue: deque[int] = deque()
-        for child in self.goto[0].values():
-            queue.append(child)
-        while queue:
-            state = queue.popleft()
-            for ch, child in self.goto[state].items():
-                queue.append(child)
-                f = self.fail[state]
-                while f and ch not in self.goto[f]:
-                    f = self.fail[f]
-                self.fail[child] = self.goto[f].get(ch, 0)
-                if self.fail[child] == child:
-                    self.fail[child] = 0
-                self.out[child] = self.out[child] + self.out[self.fail[child]]
-
-    def iter_matches(self, text: str) -> Iterator[tuple[int, str]]:
-        state = 0
-        goto, fail, out, patterns = self.goto, self.fail, self.out, self.patterns
-        for i, ch in enumerate(text):
-            while state and ch not in goto[state]:
-                state = fail[state]
-            state = goto[state].get(ch, 0)
-            if out[state]:
-                for pid in out[state]:
-                    pat = patterns[pid]
-                    yield (i - len(pat) + 1, pat)
-
-
 class FlatMatcher:
-    """Vectorized multi-pattern matcher over numpy codepoint arrays.
+    """Vectorized word-bounded multi-pattern matcher over numpy codepoints.
 
-    Same match set as :class:`AhoCorasick` (every occurrence of every
-    pattern, nested and overlapping included), found by per-length exact
-    substring probes instead of a per-character Python state machine:
-    patterns are grouped by length L into sorted fixed-width byte tables
-    (UTF-32 code units, memcmp order), the text becomes one uint32 array,
-    and for each L every candidate start position is gathered into a
-    (starts, L) matrix and membership-tested against the table with one
-    ``searchsorted`` — no Python-level loop over characters.
+    Finds every occurrence of every pattern (nested and overlapping
+    included) by per-length exact substring probes instead of a
+    per-character Python state machine: patterns are grouped by length L
+    into sorted fixed-width byte tables (UTF-32 code units, memcmp order),
+    the text becomes one uint32 array, and for each L every candidate start
+    position is gathered into a (starts, L) matrix and membership-tested
+    against the table with one ``searchsorted``.
 
     Memory is the pattern bytes themselves (4 bytes/char, ~100 MB at 10^6
-    forms of ~20 chars) instead of the dict-of-dicts trie's ~1.7 GB, and
-    the build is string sorting + one encode per length group (seconds at
-    10^6 forms) instead of a 20 M-step Python trie insertion loop.
+    forms of ~20 chars), and the build is string sorting + one encode per
+    length group (about 2 s at 10^6 forms).
 
-    ``find_word_bounded_batch`` additionally restricts candidate starts to
-    ASCII word boundaries (the spotting contract) and processes a whole
-    Arrow batch of documents as one concatenated array, so the per-batch
-    numpy overhead is paid once, not per document.
+    Candidate starts and ends are restricted to ASCII word boundaries (the
+    spotting contract, mirrored by the DuckDB oracle's ``[0-9A-Za-z]``
+    class). ``find_word_bounded_batch`` processes a whole Arrow batch of
+    documents as one concatenated array, so the per-batch numpy overhead is
+    paid once, not per document.
     """
 
-    __slots__ = ("_patterns", "_tables", "_lengths", "_has_nul", "_max_len")
+    __slots__ = ("_tables", "_lengths", "_has_nul")
 
     # gather-matrix cap: bounds the (starts x L) uint32 scratch to ~128 MB
     _CHUNK = 1 << 19
 
     def __init__(self, patterns: Iterable[str]):
         pats = sorted(set(p for p in patterns if p))
-        self._patterns: list[str] | None = pats
         self._has_nul = any("\x00" in p for p in pats)
         by_len: dict[int, list[str]] = {}
         for p in pats:
@@ -126,63 +68,6 @@ class FlatMatcher:
             )
             self._tables[L] = (keys, firsts)
         self._lengths = sorted(self._tables)
-        self._max_len = self._lengths[-1] if self._lengths else 0
-
-    @property
-    def patterns(self) -> list[str]:
-        if self._patterns is None:  # compiled load — decode lazily
-            pats = []
-            for L in self._lengths:
-                keys, _ = self._tables[L]
-                raw = keys.tobytes()
-                pats.extend(
-                    raw[i * 4 * L : (i + 1) * 4 * L].decode("utf-32-le", "surrogatepass")
-                    for i in range(len(keys))
-                )
-            self._patterns = sorted(pats)
-        return self._patterns
-
-    @classmethod
-    def _from_tables(
-        cls, tables: dict[int, tuple[np.ndarray, np.ndarray]], has_nul: bool
-    ) -> "FlatMatcher":
-        self = cls.__new__(cls)
-        self._patterns = None
-        self._has_nul = has_nul
-        self._tables = tables
-        self._lengths = sorted(tables)
-        self._max_len = self._lengths[-1] if self._lengths else 0
-        return self
-
-    def save_compiled(self, directory: str) -> None:
-        """Write the tables as .npy files a sibling worker can mmap."""
-        import json
-        import os
-
-        os.makedirs(directory, exist_ok=True)
-        for L, (keys, firsts) in self._tables.items():
-            np.save(os.path.join(directory, f"keys_{L}.npy"), keys)
-            np.save(os.path.join(directory, f"firsts_{L}.npy"), firsts)
-        with open(os.path.join(directory, "meta.json"), "w") as f:
-            json.dump({"lengths": self._lengths, "has_nul": self._has_nul}, f)
-
-    @classmethod
-    def load_compiled(cls, directory: str) -> "FlatMatcher":
-        """mmap the compiled tables — milliseconds per worker, and the OS
-        page cache holds ONE copy of the pattern bytes host-wide."""
-        import json
-        import os
-
-        with open(os.path.join(directory, "meta.json")) as f:
-            meta = json.load(f)
-        tables = {
-            int(L): (
-                np.load(os.path.join(directory, f"keys_{L}.npy"), mmap_mode="r"),
-                np.load(os.path.join(directory, f"firsts_{L}.npy"), mmap_mode="r"),
-            )
-            for L in meta["lengths"]
-        }
-        return cls._from_tables(tables, bool(meta["has_nul"]))
 
     @staticmethod
     def _codepoints(text: str) -> np.ndarray:
@@ -198,17 +83,18 @@ class FlatMatcher:
             | ((T >= 97) & (T <= 122))
         )
 
-    def _match_starts(
-        self, text: str, T: np.ndarray, starts_all: np.ndarray,
-        word: np.ndarray | None,
-    ) -> list[tuple[int, str]]:
-        """All (start, pattern) hits whose start is in ``starts_all``;
-        ``word`` non-None additionally enforces the end boundary."""
+    def _match_starts(self, text: str, T: np.ndarray) -> list[tuple[int, str]]:
+        """All (start, pattern) hits that start and end on a word boundary."""
         n = len(T)
+        word = self._word_mask(T)
+        valid = np.empty(n, dtype=bool)
+        valid[0] = True
+        valid[1:] = ~word[:-1]
+        starts_all = np.nonzero(valid)[0]
         hits: list[tuple[int, str]] = []
         for L in self._lengths:
             keys_tab, firsts = self._tables[L]
-            starts = starts_all[starts_all + L <= n] if L > 0 else starts_all
+            starts = starts_all[starts_all + L <= n]
             if starts.size == 0:
                 continue
             # first-char prefilter: most positions cannot start any pattern
@@ -217,14 +103,10 @@ class FlatMatcher:
                 firsts[np.minimum(idx, len(firsts) - 1)] == T[starts]
             )
             starts = starts[ok]
+            e = starts + L
+            starts = starts[(e == n) | ~word[np.minimum(e, n - 1)]]
             if starts.size == 0:
                 continue
-            if word is not None:
-                e = starts + L
-                end_ok = (e == n) | ~word[np.minimum(e, n - 1)]
-                starts = starts[end_ok]
-                if starts.size == 0:
-                    continue
             for lo in range(0, starts.size, self._CHUNK):
                 chunk = starts[lo : lo + self._CHUNK]
                 sub = T[chunk[:, None] + np.arange(L, dtype=chunk.dtype)]
@@ -240,23 +122,12 @@ class FlatMatcher:
                     hits.append((s, text[s : s + L]))
         return hits
 
-    def iter_matches(self, text: str) -> Iterator[tuple[int, str]]:
-        """Every occurrence of every pattern (unfiltered), like
-        ``AhoCorasick.iter_matches`` — order is not guaranteed."""
-        T = self._codepoints(text)
-        starts_all = np.arange(len(T), dtype=np.int64)
-        yield from self._match_starts(text, T, starts_all, word=None)
-
     def find_word_bounded(self, text: str) -> list[tuple[int, str]]:
-        T = self._codepoints(text)
-        n = len(T)
-        if n == 0 or not self._lengths:
+        """All matches in ``text`` that start and end on a word boundary,
+        as 0-based ``(start0, surface_form)`` sorted by ``(start0, len)``."""
+        if not text or not self._lengths:
             return []
-        word = self._word_mask(T)
-        valid = np.empty(n, dtype=bool)
-        valid[0] = True
-        valid[1:] = ~word[:-1]
-        hits = self._match_starts(text, T, np.nonzero(valid)[0], word=word)
+        hits = self._match_starts(text, self._codepoints(text))
         hits.sort(key=lambda h: (h[0], len(h[1]), h[1]))
         return hits
 
@@ -271,15 +142,12 @@ class FlatMatcher:
         texts = list(texts)
         if self._has_nul or not self._lengths:
             # NUL inside a pattern breaks the separator trick — per-doc path
-            return [
-                self.find_word_bounded(t) if t else [] for t in texts
-            ]
+            return [self.find_word_bounded(t) for t in texts]
         parts = [t or "" for t in texts]
         big = "\x00".join(parts)
         T = self._codepoints(big)
-        n = len(T)
         out: list[list[tuple[int, str]]] = [[] for _ in texts]
-        if n == 0:
+        if len(T) == 0:
             return out
         # doc k occupies [doc_off[k], doc_off[k] + len(parts[k]))
         doc_off = np.zeros(len(parts), dtype=np.int64)
@@ -287,12 +155,7 @@ class FlatMatcher:
             np.cumsum(
                 [len(p) + 1 for p in parts[:-1]], out=doc_off[1:]
             )
-        word = self._word_mask(T)
-        valid = np.empty(n, dtype=bool)
-        valid[0] = True
-        valid[1:] = ~word[:-1]
-        hits = self._match_starts(big, T, np.nonzero(valid)[0], word=word)
-        for s, pat in hits:
+        for s, pat in self._match_starts(big, T):
             k = int(np.searchsorted(doc_off, s, side="right")) - 1
             out[k].append((s - int(doc_off[k]), pat))
         for lst in out:
@@ -300,90 +163,16 @@ class FlatMatcher:
         return out
 
 
-def _is_word_char(ch: str) -> bool:
-    # ASCII alnum boundary definition — mirrored exactly by the DuckDB
-    # oracle regex class [0-9A-Za-z] so both engines agree on boundaries.
-    return ("a" <= ch <= "z") or ("A" <= ch <= "Z") or ("0" <= ch <= "9")
-
-
-def find_word_bounded(automaton, text: str) -> list[tuple[int, str]]:
-    """All dictionary matches that start and end on a word boundary.
-
-    Spotlight spots token-aligned surface forms; we approximate token
-    alignment with ASCII word boundaries, which is deterministic and
-    SQL-mirrorable. Returns 0-based ``(start0, surface_form)`` sorted by
-    ``(start0, len)`` for reproducibility.
-    """
-    if isinstance(automaton, FlatMatcher):
-        return automaton.find_word_bounded(text)
-    n = len(text)
-    hits = []
-    for start0, pat in automaton.iter_matches(text):
-        end0 = start0 + len(pat)  # exclusive
-        if start0 > 0 and _is_word_char(text[start0 - 1]):
-            continue
-        if end0 < n and _is_word_char(text[end0]):
-            continue
-        hits.append((start0, pat))
-    hits.sort(key=lambda h: (h[0], len(h[1]), h[1]))
-    return hits
-
-
-class CAhoCorasick:
-    """pyahocorasick-backed adapter, same ``iter_matches`` contract.
-
-    The C trie builds ~100× faster and uses ~10× less memory than the
-    pure-Python automaton — at a 10⁶–10⁷-surface-form Spotlight lexicon
-    this is the difference between seconds and minutes per worker. Kept
-    behind the import gate because the container image has no compiler;
-    ``test_automaton.py::test_c_adapter_matches_pure`` exercises it
-    wherever the wheel is present.
-    """
-
-    __slots__ = ("_auto", "patterns")
-
-    def __init__(self, patterns: Iterable[str]):
-        import ahocorasick
-
-        self.patterns: list[str] = sorted(set(p for p in patterns if p))
-        self._auto = ahocorasick.Automaton()
-        for pat in self.patterns:
-            self._auto.add_word(pat, pat)
-        self._auto.make_automaton()
-
-    def iter_matches(self, text: str) -> Iterator[tuple[int, str]]:
-        for end_idx, pat in self._auto.iter(text):
-            yield (end_idx - len(pat) + 1, pat)
-
-
-def build_automaton(patterns: Iterable[str], prefer_c: bool = False):
-    """Build the spotting automaton.
-
-    Default is the vectorized :class:`FlatMatcher` — fastest build AND
-    scan of the three, and ~10x smaller than the pure-Python trie at
-    10^6 forms. ``prefer_c=True`` selects the pyahocorasick C trie when
-    the wheel is present (kept for parity testing; the flat matcher
-    outperforms it on batch scans because matching stays in numpy).
-    ``AhoCorasick`` remains the portable correctness reference."""
-    if prefer_c:
-        try:
-            import ahocorasick  # noqa: F401
-
-            return CAhoCorasick(patterns)
-        except ImportError:
-            pass
-    return FlatMatcher(patterns)
-
-
 # ---------------------------------------------------------------------------
-# Artifact path: build the automaton ON THE EXECUTORS from a parquet
-# artifact of surface forms, once per worker process, instead of
-# collect()-ing the lexicon to the driver and shipping a pickled automaton
-# through a broadcast. At a real Spotlight lexicon (10^6-10^7 forms) the
-# pickled pure-Python trie is GBs and the driver build takes minutes; the
-# artifact is ~100 MB of compressed parquet and each worker builds the trie
-# locally (C-speed with pyahocorasick), amortized by worker reuse.
-_PROCESS_CACHE: dict[str, object] = {}
+# Artifact path: the driver writes the distinct surface forms as a parquet
+# artifact (distributed write, no driver collect) and each Python worker
+# builds its own FlatMatcher from it — 0.06 s at 50k forms, about 2 s at
+# 10^6 — amortized by worker reuse. The memo holds ONE matcher per worker,
+# keyed on the artifact's part-file names: Spark names part files with a
+# per-write job UUID, so a rewritten artifact (same path, new lexicon) or a
+# new streaming micro-batch artifact replaces the entry instead of serving
+# stale mentions or piling up one matcher per path.
+_MEMO: tuple[tuple[str, ...], FlatMatcher] | None = None
 
 
 def write_lexicon_artifact(lexicon, path: str) -> str:
@@ -394,90 +183,17 @@ def write_lexicon_artifact(lexicon, path: str) -> str:
     return path
 
 
-def _read_artifact_forms(path: str) -> list[str]:
-    import glob
-    import os
-
+def load_automaton_from_artifact(path: str) -> FlatMatcher:
+    """This worker's matcher for the surface-form artifact at ``path``
+    (a local path or any URI pyarrow resolves, e.g. ``file://``)."""
+    global _MEMO
     import pyarrow.parquet as pq
 
-    forms: list[str] = []
-    for f in sorted(glob.glob(os.path.join(path, "*.parquet"))):
-        forms.extend(pq.read_table(f, columns=["surface_form"]).column(0).to_pylist())
-    return forms
-
-
-def load_automaton_from_artifact(path: str):
-    """Executor-side automaton with a build-once-per-HOST protocol.
-
-    The first worker to need the artifact compiles the flat tables and
-    publishes them as mmap-able .npy files next to the parquet (atomic
-    tempdir + rename under a lock file); every other worker — including
-    cold ones joining the pool later — loads the compiled form in
-    milliseconds, and the OS page cache keeps ONE host-wide copy of the
-    pattern bytes instead of a private heap per process. Falls back to a
-    private in-process build whenever the shared directory is not
-    writable or the lock is contended past a short wait (correctness
-    never depends on the cache). Per-process memo on top, as before."""
-    auto = _PROCESS_CACHE.get(path)
-    if auto is not None:
-        return auto
-
-    import os
-    import tempfile
-    import time
-
-    compiled = os.path.join(path, "_flat_compiled")
-    marker = os.path.join(compiled, "meta.json")
-
-    def _try_load():
-        try:
-            if os.path.exists(marker):
-                return FlatMatcher.load_compiled(compiled)
-        except Exception:
-            return None
-        return None
-
-    auto = _try_load()
-    if auto is None:
-        lock_fd = None
-        try:
-            import fcntl
-
-            lock_fd = os.open(os.path.join(path, "_flat_compiled.lock"),
-                              os.O_CREAT | os.O_RDWR)
-            got = False
-            # bounded wait: either we win the build lock, or the winner
-            # publishes the marker while we poll
-            for _ in range(600):
-                try:
-                    fcntl.lockf(lock_fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
-                    got = True
-                    break
-                except OSError:
-                    auto = _try_load()
-                    if auto is not None:
-                        break
-                    time.sleep(0.05)
-            if auto is None and got:
-                auto = _try_load()  # published while we waited on the lock
-                if auto is None:
-                    built = FlatMatcher(_read_artifact_forms(path))
-                    try:
-                        tmp = tempfile.mkdtemp(prefix="_flat_tmp_", dir=path)
-                        built.save_compiled(tmp)
-                        os.rename(tmp, compiled)
-                    except OSError:
-                        pass
-                    auto = built
-        except Exception:
-            auto = None
-        finally:
-            if lock_fd is not None:
-                try:
-                    os.close(lock_fd)  # releases the lock
-                except OSError:
-                    pass
-    if auto is None:
-        auto = build_automaton(_read_artifact_forms(path))
-    _PROCESS_CACHE[path] = auto
-    return auto
+    dataset = pq.ParquetDataset(path)  # lists part files, skips _/. files
+    key = tuple(sorted(dataset.files))
+    if not key:
+        raise FileNotFoundError(f"lexicon artifact {path!r} has no part files")
+    if _MEMO is None or _MEMO[0] != key:
+        forms = dataset.read(columns=["surface_form"]).column(0).to_pylist()
+        _MEMO = (key, FlatMatcher(forms))
+    return _MEMO[1]

@@ -3,7 +3,8 @@
 documents(url, warc_ts, html, text, lang)
   -> extract (html -> text, byte-identical invariant)
   -> segment (overlap windows + precomputed stitch bounds; skew breaking)
-  -> spot (vectorized flat matcher, batch pandas UDF)
+  -> spot (FlatMatcher built per worker from the lexicon artifact;
+           whole-Arrow-batch pandas UDF)
   -> stitch (pure filter)
   -> link (candidates x broadcast lexicon; prior + context scoring; top-1)
   -> overlaps (detect/categorize/resolve — doc-local windows)
@@ -62,18 +63,6 @@ class PipelineConfig:
                                          # output of write_closed_redirects
                                          # (the production setup — closure is
                                          # an offline dim-build step)
-    partition_by_doc: bool = True        # explicit repartition(doc_id) before
-                                         # the top-1 agg so ONE exchange serves
-                                         # link + the overlap window family.
-                                         # A/B'd at the driver bench yardstick
-                                         # (local[32], 20k docs, warm pass +
-                                         # min-of-2, scripts/
-                                         # ab_partition_by_doc.py): one
-                                         # exchange 9.19 s vs two exchanges
-                                         # 11.56 s — the round-4 "regression"
-                                         # was host contention + cold python
-                                         # workers, not the plan (see
-                                         # BENCH/BASELINE.md A/B table).
 
 
 def run_pipeline(
@@ -88,9 +77,9 @@ def run_pipeline(
     cfg = cfg or PipelineConfig()
     runner = StageRunner(spark, cfg.checkpoint_root)
 
-    # No driver collect, no pickled-automaton broadcast: the distinct
-    # surface forms are written as a parquet artifact (distributed write)
-    # and each python worker builds + caches the automaton locally
+    # No driver collect: the distinct surface forms are written as a
+    # parquet artifact (distributed write) and each python worker builds
+    # its own FlatMatcher from it once
     # (kgspark.automaton.load_automaton_from_artifact). An explicitly
     # configured artifact that is already complete (_SUCCESS) is reused —
     # the production setup writes it once per lexicon refresh, like the
@@ -111,10 +100,8 @@ def run_pipeline(
     # Probe _SUCCESS through the Hadoop FileSystem API (not os.path), so
     # reuse works when the artifact lives on HDFS/S3A.
     fs, success = _hadoop_fs(spark, artifact.rstrip("/") + "/_SUCCESS")
-    if cfg.lexicon_artifact and fs.exists(success):
-        automaton_src = artifact
-    else:
-        automaton_src = write_lexicon_artifact(lexicon, artifact)
+    if not (cfg.lexicon_artifact and fs.exists(success)):
+        write_lexicon_artifact(lexicon, artifact)
 
     # No cache on the extract stage: since the doc-token carry moved to
     # the segment stage (doc_tokens ride the segment rows), the extracted
@@ -147,7 +134,7 @@ def run_pipeline(
         lambda: segment.stitch_filter(
             spot.spot_segments(
                 segs,
-                automaton_src,
+                artifact,
                 doc_col=doc_col,
                 keep_extra=("keep_from", "keep_to", "doc_tokens"),
             )
@@ -170,9 +157,9 @@ def run_pipeline(
             confidence=cfg.confidence,
             types=cfg.types,
             # one doc-keyed exchange serves the top-1 agg AND the whole
-            # downstream overlap window family; A/B-confirmed at the driver
-            # yardstick — see PipelineConfig.partition_by_doc.
-            partition_by_doc=cfg.partition_by_doc,
+            # downstream overlap window family; it beat the two-exchange
+            # plan in its A/B (BENCH/AB_PARTITION.json)
+            partition_by_doc=True,
             # narrow rows through the cache + window family; the type
             # payload re-attaches once, post-resolution (attach_types) —
             # with a D6 type restriction the types must ride along for

@@ -3,11 +3,11 @@
 Native replacement for Spotlight's lexicon spotter (the mention-detection
 half of the black box the reference calls over HTTP,
 ``R/dbpedia.R:471-485``; algorithm per Mendes et al. 2011 §4.1): a
-multi-pattern matcher over the lexicon's surface forms (the vectorized
-``FlatMatcher`` by default — numpy per-length substring probes, whole
-Arrow batch per call; the classic Aho-Corasick remains the reference
-implementation), applied in an Arrow-batched pandas UDF. Emits *all* word-bounded occurrences (nested and
-overlapping included) — overlap resolution is downstream and relational.
+multi-pattern matcher over the lexicon's surface forms (``FlatMatcher`` —
+numpy per-length substring probes), built once per Python worker from the
+lexicon's parquet artifact and applied to whole Arrow batches in a pandas
+UDF. Emits *all* word-bounded occurrences (nested and overlapping
+included) — overlap resolution is downstream and relational.
 
 Offsets: the reference emits 1-based character starts (Spotlight's 0-based
 ``@offset`` plus the segment offset, default 1 — ``R/dbpedia.R:365,557``).
@@ -22,47 +22,33 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.functions import pandas_udf
 
-from kgspark.automaton import find_word_bounded, load_automaton_from_artifact
+from kgspark.automaton import load_automaton_from_artifact
 from kgspark.schemas import MENTIONS_ARRAY
 
 
-def make_spot_udf(source):
-    """Build the spotting pandas UDF.
+def make_spot_udf(artifact: str):
+    """Build the spotting pandas UDF over the surface-form artifact at
+    ``artifact`` (see ``kgspark.automaton.write_lexicon_artifact``).
 
-    ``source`` is either a ``Broadcast[AhoCorasick]`` (small lexicons; the
-    pickled automaton rides the broadcast) or a ``str`` path to a surface-
-    form parquet artifact — then each python worker builds the automaton
-    locally once and caches it per-process (the 10⁶⁺-form scale path; see
-    kgspark.automaton.load_automaton_from_artifact).
+    Each Python worker builds its matcher from the artifact once
+    (``load_automaton_from_artifact``) and matches every Arrow batch in
+    one numpy pass (``FlatMatcher.find_word_bounded_batch``).
     """
-
-    by_path = isinstance(source, str)
 
     @pandas_udf(MENTIONS_ARRAY)
     def _spot(texts: pd.Series) -> pd.Series:
-        ac = load_automaton_from_artifact(source) if by_path else source.value
-
-        if hasattr(ac, "find_word_bounded_batch"):
-            # vectorized path: the whole Arrow batch is matched in one
-            # numpy pass (kgspark.automaton.FlatMatcher)
-            per_doc = ac.find_word_bounded_batch(texts.tolist())
-            return pd.Series(
-                [[{"off0": s, "sf": p} for s, p in hits] for hits in per_doc]
-            )
-
-        def one(t):
-            if t is None:
-                return []
-            return [{"off0": s, "sf": p} for s, p in find_word_bounded(ac, t)]
-
-        return texts.map(one)
+        matcher = load_automaton_from_artifact(artifact)
+        per_doc = matcher.find_word_bounded_batch(texts.tolist())
+        return pd.Series(
+            [[{"off0": s, "sf": p} for s, p in hits] for hits in per_doc]
+        )
 
     return _spot
 
 
 def spot_segments(
     segments: DataFrame,
-    automaton_src,
+    artifact: str,
     doc_col: str = "url",
     seg_text_col: str = "seg_text",
     seg_off_col: str = "seg_off",
@@ -73,7 +59,7 @@ def spot_segments(
     One narrow pipeline: UDF -> explode; no shuffle. ``start`` is 1-based in
     the original document (offset rebase, P2 — ``R/dbpedia.R:557``).
     """
-    spot = make_spot_udf(automaton_src)
+    spot = make_spot_udf(artifact)
     exploded = segments.withColumn("_m", F.explode(spot(F.col(seg_text_col))))
     cols = [
         F.col(doc_col).alias("doc_id"),
@@ -84,10 +70,10 @@ def spot_segments(
 
 
 def spot_documents(
-    docs: DataFrame, automaton_src, doc_col: str = "url", text_col: str = "text"
+    docs: DataFrame, artifact: str, doc_col: str = "url", text_col: str = "text"
 ) -> DataFrame:
     """Spot whole (un-segmented) documents; start is 1-based."""
-    spot = make_spot_udf(automaton_src)
+    spot = make_spot_udf(artifact)
     return (
         docs.withColumn("_m", F.explode(spot(F.col(text_col))))
         .select(

@@ -12,6 +12,7 @@ axis (a handful of URIs dominate mentions), so the salt spreads writers.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.functions.partitioning import bucket
 
 PRED_MENTIONED_IN = "kg:mentionedIn"
 PRED_ANCHOR_OF = "kg:anchorOf"
@@ -99,7 +100,7 @@ def write_triples_iceberg(
     """
     (
         triples.writeTo(table)
-        .partitionedBy(F.col("pred"), F.bucket(salt_buckets, F.col("subj")))
+        .partitionedBy(F.col("pred"), bucket(salt_buckets, F.col("subj")))
         .using("iceberg")
         .createOrReplace()
     )

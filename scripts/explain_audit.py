@@ -179,7 +179,7 @@ def main() -> int:
     _spots = entrymod._spot_from_segments(spark, _segs) if hasattr(
         entrymod, "_spot_from_segments") else None
     if _spots is None:
-        # spot via the broadcast-automaton path used by q_spot_mentions
+        # spot via a lexicon artifact, as q_spot_mentions does
         from kgspark import synth as _synth
         from kgspark.automaton import write_lexicon_artifact as _wla
         import tempfile as _tf

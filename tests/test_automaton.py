@@ -1,9 +1,17 @@
-"""Aho-Corasick correctness vs a brute-force scan (property-style)."""
+"""FlatMatcher correctness: brute force -> Aho-Corasick reference -> matcher,
+plus the executor-side artifact path."""
 
 import numpy as np
+import pytest
+from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
-from kgspark.automaton import build_automaton, find_word_bounded
+from aho_reference import AhoCorasick
+from kgspark.automaton import (
+    FlatMatcher,
+    load_automaton_from_artifact,
+    write_lexicon_artifact,
+)
 
 
 def brute_matches(patterns, text):
@@ -19,47 +27,85 @@ def brute_matches(patterns, text):
     return sorted(out)
 
 
-def brute_word_bounded(patterns, text):
-    def alnum(c):
-        return c.isascii() and c.isalnum()
+def _ascii_word(c):
+    return c.isascii() and c.isalnum()
 
+
+def word_bounded(matches, text):
+    """Keep the ``(start0, pattern)`` matches that start and end on an
+    ASCII word boundary, in the matcher's (start, len, pattern) order."""
     out = []
-    for i, p in brute_matches(patterns, text):
+    for i, p in matches:
         j = i + len(p)
-        if i > 0 and alnum(text[i - 1]):
+        if i > 0 and _ascii_word(text[i - 1]):
             continue
-        if j < len(text) and alnum(text[j]):
+        if j < len(text) and _ascii_word(text[j]):
             continue
         out.append((i, p))
-    return sorted(out)
+    return sorted(out, key=lambda h: (h[0], len(h[1]), h[1]))
+
+
+def reference_batch(patterns, texts):
+    ref = AhoCorasick(patterns)
+    return [word_bounded(ref.iter_matches(t), t) if t else [] for t in texts]
 
 
 PATTERNS = ["ab", "abc", "bc", "c", "abcd", "b a", "aa"]
 
 
 def test_matches_equal_bruteforce_random_strings():
+    """The reference itself: every occurrence, nested and overlapping."""
     rng = np.random.RandomState(1)
     alphabet = "abcd "
+    ref = AhoCorasick(PATTERNS)
     for trial in range(30):
         text = "".join(alphabet[k] for k in rng.randint(0, len(alphabet), size=200))
-        ac = build_automaton(PATTERNS)
-        got = sorted(ac.iter_matches(text))
-        assert got == brute_matches(PATTERNS, text), f"trial {trial}"
+        assert sorted(ref.iter_matches(text)) == brute_matches(PATTERNS, text), trial
 
 
 def test_word_bounded_equal_bruteforce():
     rng = np.random.RandomState(2)
     alphabet = "abcd .,"
-    for trial in range(30):
-        text = "".join(alphabet[k] for k in rng.randint(0, len(alphabet), size=300))
-        ac = build_automaton(PATTERNS)
-        assert find_word_bounded(ac, text) == brute_word_bounded(PATTERNS, text)
+    texts = [
+        "".join(alphabet[k] for k in rng.randint(0, len(alphabet), size=300))
+        for _ in range(30)
+    ]
+    got = FlatMatcher(PATTERNS).find_word_bounded_batch(texts)
+    assert got == [word_bounded(brute_matches(PATTERNS, t), t) for t in texts]
+
+
+# Word chars (ASCII alnum), non-ASCII letters (word chars to str.isalnum but
+# boundaries to the spotter), an astral code point, separators and NUL.
+FORM_ALPHABET = "ab1 éß中𝔸-"
+FILLER_ALPHABET = FORM_ALPHABET + ".\x00"
+
+
+@st.composite
+def lexicon_and_batch(draw, nul_forms):
+    forms = draw(st.lists(st.text(FORM_ALPHABET, min_size=1, max_size=4),
+                          min_size=1, max_size=8))
+    if nul_forms:
+        # a NUL inside a form sends the matcher down its per-document path
+        forms.append(draw(st.text(FORM_ALPHABET, max_size=2)) + "\x00"
+                     + draw(st.text(FORM_ALPHABET, max_size=2)))
+    piece = st.one_of(st.sampled_from(forms), st.text(FILLER_ALPHABET, max_size=3))
+    doc = st.one_of(st.none(), st.just(""), st.lists(piece, max_size=12).map("".join))
+    return forms, draw(st.lists(doc, max_size=6))
+
+
+@pytest.mark.parametrize("nul_forms", [False, True])
+@settings(max_examples=200, deadline=None)
+@given(data=st.data())
+def test_flat_matcher_batch_equals_reference(nul_forms, data):
+    forms, texts = data.draw(lexicon_and_batch(nul_forms))
+    assert FlatMatcher(forms).find_word_bounded_batch(texts) == reference_batch(
+        forms, texts
+    )
 
 
 def test_nested_and_overlapping_patterns_all_reported():
-    ac = build_automaton(["sort merge join", "sort merge", "merge join", "merge", "join"])
-    text = "a sort merge join b"
-    got = {(s, p) for s, p in find_word_bounded(ac, text)}
+    m = FlatMatcher(["sort merge join", "sort merge", "merge join", "merge", "join"])
+    got = set(m.find_word_bounded("a sort merge join b"))
     assert got == {
         (2, "sort merge join"),
         (2, "sort merge"),
@@ -70,30 +116,73 @@ def test_nested_and_overlapping_patterns_all_reported():
 
 
 def test_boundary_rejections():
-    ac = build_automaton(["spark"])
-    assert find_word_bounded(ac, "sparkx") == []
-    assert find_word_bounded(ac, "xspark") == []
-    assert find_word_bounded(ac, "spark.") == [(0, "spark")]
-    assert find_word_bounded(ac, "(spark)") == [(1, "spark")]
+    m = FlatMatcher(["spark"])
+    assert m.find_word_bounded("sparkx") == []
+    assert m.find_word_bounded("xspark") == []
+    assert m.find_word_bounded("spark.") == [(0, "spark")]
+    assert m.find_word_bounded("(spark)") == [(1, "spark")]
 
 
-def test_artifact_path_equals_broadcast(spark, tmp_path):
-    """Spotting through the executor-built artifact automaton must equal
-    spotting through a driver-built broadcast automaton."""
-    from kgspark import synth
-    from kgspark.automaton import build_automaton, write_lexicon_artifact
+def test_empty_artifact_raises(tmp_path):
+    """An artifact with no part files must fail loudly, not spot nothing."""
+    (tmp_path / "_SUCCESS").touch()
+    with pytest.raises(FileNotFoundError):
+        load_automaton_from_artifact(str(tmp_path))
+
+
+def _spot(docs, path):
     from kgspark.spot import spot_documents
 
-    docs = synth.synth_documents(spark, n_docs=30).select(
+    return sorted(map(tuple, spot_documents(docs, path, doc_col="doc_id").collect()))
+
+
+def _docs(spark, n_docs):
+    from kgspark import synth
+
+    return synth.synth_documents(spark, n_docs=n_docs).select(
         F.col("url").alias("doc_id"), "text"
     )
-    forms = sorted({r[0] for r in synth.LEXICON_ROWS})
-    bc = spark.sparkContext.broadcast(build_automaton(forms))
+
+
+def test_artifact_path_equals_driver_reference(spark, tmp_path):
+    """Spotting through the executor-built artifact matcher must equal the
+    Aho-Corasick reference run on the driver over the same documents."""
+    from kgspark import synth
+
+    docs = _docs(spark, 30)
     path = str(tmp_path / "lexforms")
     write_lexicon_artifact(synth.lexicon_df(spark), path)
-    via_bc = sorted(map(tuple, spot_documents(docs, bc, doc_col="doc_id").collect()))
-    via_art = sorted(map(tuple, spot_documents(docs, path, doc_col="doc_id").collect()))
-    assert via_bc == via_art and len(via_bc) > 0
+    rows = docs.collect()
+    forms = sorted({r[0] for r in synth.LEXICON_ROWS})
+    want = sorted(
+        (r.doc_id, s + 1, p)
+        for r, hits in zip(rows, reference_batch(forms, [r.text for r in rows]))
+        for s, p in hits
+    )
+    assert _spot(docs, path) == want and len(want) > 0
+
+
+def test_file_uri_artifact_equals_plain_path(spark, tmp_path):
+    from kgspark import synth
+
+    docs = _docs(spark, 20)
+    path = str(tmp_path / "lexforms")
+    write_lexicon_artifact(synth.lexicon_df(spark), path)
+    plain = _spot(docs, path)
+    assert _spot(docs, "file://" + path) == plain and len(plain) > 0
+
+
+def test_rewritten_artifact_is_not_stale(spark, tmp_path):
+    """One artifact path rewritten with a different lexicon in the same
+    session: every spot run must see the lexicon written last."""
+    docs = spark.createDataFrame(
+        [(f"d{i}", "spark join table stream") for i in range(8)], "doc_id string, text string"
+    )
+    path = str(tmp_path / "lexforms")
+    for form in ("spark", "join", "table"):
+        write_lexicon_artifact(spark.createDataFrame([(form,)], "surface_form string"), path)
+        got = {text for _, _, text in _spot(docs, path)}
+        assert got == {form}
 
 
 def test_big_lexicon_automaton_spots_correctly(spark, tmp_path):
@@ -101,31 +190,10 @@ def test_big_lexicon_automaton_spots_correctly(spark, tmp_path):
     forms never appear in the corpus, so spotting must return exactly the
     same mentions as the 31-form lexicon (and the build must not blow up)."""
     from kgspark import synth
-    from kgspark.automaton import build_automaton, write_lexicon_artifact
-    from kgspark.spot import spot_documents
 
-    docs = synth.synth_documents(spark, n_docs=20).select(
-        F.col("url").alias("doc_id"), "text"
-    )
-    path = str(tmp_path / "biglex")
-    write_lexicon_artifact(synth.big_lexicon_df(spark, n=100_000), path)
-    big = sorted(map(tuple, spot_documents(docs, path, doc_col="doc_id").collect()))
-    small_bc = spark.sparkContext.broadcast(
-        build_automaton(sorted({r[0] for r in synth.LEXICON_ROWS}))
-    )
-    small = sorted(map(tuple, spot_documents(docs, small_bc, doc_col="doc_id").collect()))
-    assert big == small and len(big) > 0
-
-
-def test_c_adapter_matches_pure():
-    """pyahocorasick adapter parity — exercised wherever the wheel exists."""
-    import pytest as _pt
-
-    _pt.importorskip("ahocorasick")
-    from kgspark.automaton import AhoCorasick, CAhoCorasick, find_word_bounded
-
-    pats = ["join", "merge join", "sort merge join", "a", "spark"]
-    text = "a sort merge join beats a hash join in spark sometimes"
-    pure = find_word_bounded(AhoCorasick(pats), text)
-    fast = find_word_bounded(CAhoCorasick(pats), text)
-    assert pure == fast
+    docs = _docs(spark, 20)
+    big_path, small_path = str(tmp_path / "biglex"), str(tmp_path / "smalllex")
+    write_lexicon_artifact(synth.big_lexicon_df(spark, n=100_000), big_path)
+    write_lexicon_artifact(synth.lexicon_df(spark), small_path)
+    big = _spot(docs, big_path)
+    assert big == _spot(docs, small_path) and len(big) > 0
